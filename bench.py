@@ -34,24 +34,44 @@ def main():
     spark = get_spark("hgs-bench")
     # warm the JVM + parquet footers
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    timings, builds = time_queries(spark, sf_dir, bench_queries(), REGISTRY)
+    out, detail = summarize(timings, builds, sf_dir)
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "BENCH_DETAIL.json"), "w") as fh:
+        json.dump(detail, fh, indent=1, sort_keys=True)
+    print(json.dumps(out))
+    spark.stop()
 
+
+def time_queries(spark, sf_dir, names, registry):
+    """Run each query through the noop sink. Returns ``(timings,
+    builds)``: wall seconds per query (-1.0 when it raised) and, for the
+    queries that succeeded, the seconds their run spent inside memoized
+    one-time builds. A failed query's wall time is not counted, so its
+    build time is not either."""
     import hadoopgis_spark.workload as _wl
 
     timings: dict[str, float] = {}
     builds: dict[str, float] = {}  # memoized one-time build share
-    for name in bench_queries():
-        q = REGISTRY[name]
+    for name in names:
         t0 = time.time()
         b0 = _wl._MEMO_BUILD_SECONDS
         try:
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.time() - t0, 3)
+            registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception as e:  # record failures, keep the bench alive
             print(f"bench {name} failed: {e}", file=sys.stderr)
             timings[name] = -1.0
+            continue
+        timings[name] = round(time.time() - t0, 3)
         b = round(_wl._MEMO_BUILD_SECONDS - b0, 3)
         if b > 0:
             builds[name] = b
+    return timings, builds
+
+
+def summarize(timings, builds, sf_dir):
+    """(stdout line, BENCH_DETAIL.json record) from ``time_queries``
+    output."""
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     failed = sorted(n for n, v in timings.items() if v < 0)
     slowest = dict(sorted(
@@ -97,11 +117,7 @@ def main():
     detail = dict(out, queries=timings, queries_truncated=False,
                   failed=failed, build_seconds=builds)
     del detail["detail"]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_DETAIL.json"), "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
-    print(json.dumps(out))
-    spark.stop()
+    return out, detail
 
 
 if __name__ == "__main__":

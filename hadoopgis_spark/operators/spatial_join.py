@@ -106,7 +106,7 @@ def _manifest_rowcount_upper(df: DataFrame) -> int | None:
     Upper-bound direction is then safe: every admitted operator only
     preserves or shrinks the scan's count, and overestimating steers
     the auto strategy to the always-correct tile path."""
-    from urllib.parse import urlparse
+    from hadoopgis_spark.sources import fsio as _fsio
 
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
@@ -124,7 +124,8 @@ def _manifest_rowcount_upper(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    dirs = {os.path.dirname(urlparse(f).path) for f in files}
+    paths = [_fsio.uri_to_path(f) for f in files]
+    dirs = {os.path.dirname(p) for p in paths}
     if len(dirs) != 1:
         return None
     from hadoopgis_spark.sources.skipping import _load_manifest
@@ -140,7 +141,7 @@ def _manifest_rowcount_upper(df: DataFrame) -> int | None:
         per_file[r.file] = int(r.rows)
     # orphan check: an input file the manifest never counted carries
     # rows outside the sum — the "upper bound" would silently undercount
-    names = {os.path.basename(urlparse(f).path) for f in files}
+    names = {os.path.basename(p) for p in paths}
     if not names <= set(per_file):
         return None
     return sum(per_file.values())

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 import contextlib as _ctx
 import posixpath as _pp
+from urllib.parse import unquote as _unquote
+from urllib.parse import urlparse as _urlparse
 
 import pyarrow as _pa
 import pyarrow.fs as _pafs
@@ -38,6 +40,7 @@ import pyarrow.parquet as _pq
 
 __all__ = [
     "resolve",
+    "uri_to_path",
     "use_filesystem",
     "listdir",
     "listdir_stat",
@@ -88,6 +91,16 @@ def resolve(path: str) -> tuple:
     if "://" in path:
         return _pafs.FileSystem.from_uri(path)
     return _LOCAL, path
+
+
+def uri_to_path(uri: str) -> str:
+    """The facade path for a file URI as Spark reports it (``inputFiles``,
+    plan leaves): the decoded plain path for ``file:`` URIs, the string
+    itself for bare paths and every other scheme (``s3://``,
+    ``hdfs://``), which :func:`resolve` needs whole — cutting such a URI
+    to its path part drops the bucket or namenode."""
+    u = _urlparse(uri)
+    return _unquote(u.path) if u.scheme == "file" else uri
 
 
 def _info(path: str):

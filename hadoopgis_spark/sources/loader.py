@@ -19,7 +19,19 @@ queries stay exact:
 
 Metadata (the ``info.cfg``/``partition.idx`` analogue,
 ``query_partition.hpp:270-288``) is JSON + the tile table itself stored
-as parquet under ``<path>/_hgs_meta``.
+as parquet under ``<path>/_hgs_meta``. The JSON also carries the
+written frame's Spark schema (``schema``).
+
+Reading mirrors the reference's containment scan, which opens only the
+files of the tiles that survive the ``partition.idx`` prune
+(``query_containment.hpp:124-138``): a windowed read prunes the tile
+table driver-side, lists ``<path>`` once driver-side, and hands Spark
+only the kept ``tile_id=<id>`` directories plus the stored schema. So
+planning a window runs no Spark job — neither the layout-wide listing
+job (Spark lists more than 32 directories with a parallel job) nor the
+schema-inference job. A window keeping more than 32 non-empty tiles
+still gets the parallel listing of those directories. Layouts saved
+before ``schema`` was stored fall back to Spark's schema inference.
 """
 
 from __future__ import annotations
@@ -28,6 +40,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hadoopgis_spark.operators.containment import parse_window
 from hadoopgis_spark.sources import fsio as _fs
@@ -116,6 +129,9 @@ def save_partitioned(
         "max_obj_w": max_w,
         "max_obj_h": max_h,
         "n_tiles": len(tiles),
+        # the written frame's Spark schema: load_partitioned passes it
+        # to the reader, so planning a read infers nothing
+        "schema": owned.schema.json(),
     }
     _write_tiles_table(f"{path}/_hgs_meta/tiles", tiles)
     # write info JSON through the JVM-free driver-side path (fsio —
@@ -167,27 +183,38 @@ def load_partitioned(
     window: str | None = None,
     predicate: str = "st_intersects",
 ) -> DataFrame:
-    """Read a spatially-partitioned dataset; with ``window``, prune tiles
-    on the partition column (directory-level skip — the reference's
-    ``partition.idx`` pruning, ``query_containment.hpp:124-138``) plus the
-    row-level MBB filter, then exact refine where needed."""
+    """Read a spatially-partitioned dataset; with ``window``, read only
+    the tiles the window can touch (directory-level skip — the
+    reference's ``partition.idx`` pruning, ``query_containment.hpp:124-138``)
+    plus the row-level MBB filter, then exact refine where needed.
+
+    Planning a windowed read launches no Spark job: of the kept tiles,
+    only those with a directory (an empty tile has none) are read, with
+    the schema stored in ``info.json``. Without a window the whole
+    layout is read with that schema. Layouts saved without a stored
+    schema still load; Spark infers theirs, one job per read."""
     meta = json.loads(_fs.read_bytes(f"{path}/_hgs_meta/info.json"))
-    df = spark.read.parquet(path)
-    df = df.filter(~F.col("tile_id").isNull())  # excludes _hgs_meta rows if any
+    reader = spark.read
+    if "schema" in meta:
+        reader = reader.schema(StructType.fromJson(json.loads(meta["schema"])))
     if window is None:
-        return df
+        return reader.parquet(path).filter(~F.col("tile_id").isNull())
     _, (wx0, wy0, wx1, wy1) = parse_window(window)
     pw = (wx0 - meta["max_obj_w"], wy0 - meta["max_obj_h"], wx1, wy1)
     # driver-side tile prune (same closed-box test as boxes.
     # box_intersects): the tile table is KBs and already bounded by the
     # partitioner sample, so probing it through a Spark job charged a
     # fixed-latency round trip per windowed read
-    keep = [
-        tid
+    keep = {
+        f"tile_id={tid}"
         for tid, tx0, ty0, tx1, ty1 in _read_tiles_table(f"{path}/_hgs_meta/tiles")
         if tx0 <= pw[2] and pw[0] <= tx1 and ty0 <= pw[3] and pw[1] <= ty1
-    ]
-    pruned = df.filter(F.col("tile_id").isin(keep))
+    }
+    dirs = [f"{path}/{n}" for n in _fs.listdir(path) if n in keep]
+    if dirs or "schema" in meta:
+        pruned = reader.option("basePath", path).parquet(*dirs)
+    else:  # legacy layout, no row in the window: infer, keep no row
+        pruned = reader.parquet(path).filter(F.lit(False))
     from hadoopgis_spark.operators.containment import containment
 
     return containment(

@@ -93,6 +93,45 @@ _POSIX_IO = re.compile(
 )
 
 
+class TestUriToPath:
+    """One URI -> facade-path rule for both driver-side row bounds (the
+    footer bound in operators.mbb, the manifest bound in
+    operators.spatial_join)."""
+
+    @pytest.mark.parametrize("uri, path", [
+        ("file:/tmp/t/part-0.parquet", "/tmp/t/part-0.parquet"),
+        ("file:///tmp/t/part-0.parquet", "/tmp/t/part-0.parquet"),
+        ("file:/tmp/a%20b/part-0.parquet", "/tmp/a b/part-0.parquet"),
+        ("/tmp/t/part-0.parquet", "/tmp/t/part-0.parquet"),
+        ("s3://b/t/part-0.parquet", "s3://b/t/part-0.parquet"),
+        ("hdfs://nn:8020/t/part-0.parquet", "hdfs://nn:8020/t/part-0.parquet"),
+    ])
+    def test_rule(self, uri, path):
+        assert fsio.uri_to_path(uri) == path
+
+    def test_manifest_bound_keeps_the_bucket(self, monkeypatch):
+        """The manifest bound looks its manifest up under the whole
+        s3:// directory, not under the bucket-less path part."""
+        from types import SimpleNamespace
+
+        import hadoopgis_spark.sources.skipping as skipping
+        from hadoopgis_spark.operators.spatial_join import _manifest_rowcount_upper
+
+        seen = []
+
+        def _load(spark, path):
+            seen.append(path)
+            return [SimpleNamespace(file="part-0.parquet", rows=7)]
+
+        monkeypatch.setattr(skipping, "_load_manifest", _load)
+        plan = SimpleNamespace(toString=lambda: "Relation [a#0] parquet")
+        df = SimpleNamespace(
+            _jdf=SimpleNamespace(queryExecution=lambda: SimpleNamespace(analyzed=lambda: plan)),
+            inputFiles=lambda: ["s3://b/t/part-0.parquet"])
+        assert _manifest_rowcount_upper(df) == 7
+        assert seen == ["s3://b/t"]
+
+
 class TestMetadataTierUsesFacadeOnly:
     """VERDICT r9 item 1 'done' criterion: no direct os.*/shutil/open
     file I/O touches a table root in the metadata tier — everything

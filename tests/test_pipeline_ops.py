@@ -996,6 +996,85 @@ class TestSources:
 
         assert _bytes(pbt) < _bytes(pt)
 
+    @staticmethod
+    def _saved_triangles(spark, path, **kw):
+        import random
+
+        rng = random.Random(11)
+        rows = []
+        for i in range(400):
+            x, y = rng.uniform(0, 100), rng.uniform(0, 100)
+            pts = [(x, y), (x + 3, y), (x, y + 3), (x, y)]
+            rows.append((i, "POLYGON ((" + ", ".join(f"{a:.3f} {b:.3f}" for a, b in pts) + "))"))
+        df = spark.createDataFrame(rows, "id long, geom string")
+        return save_partitioned(df, path, bucket_size=50, **kw)
+
+    @pytest.mark.parametrize("store_wkb", [False, True])
+    def test_load_partitioned_window_dtypes_match_full(self, spark, tmp_path, store_wkb):
+        p = str(tmp_path / "loaded")
+        meta = self._saved_triangles(spark, p, store_wkb=store_wkb)
+        assert "schema" in meta
+        full = load_partitioned(spark, p)
+        win = load_partitioned(spark, p, window="20,20,60,60")
+        assert full.dtypes == win.dtypes
+        assert dict(full.dtypes)["geom"] == ("binary" if store_wkb else "string")
+        assert full.schema == spark.read.parquet(p).schema
+
+    def test_load_partitioned_legacy_layout_without_schema(self, spark, tmp_path):
+        """A layout whose info.json predates the stored schema still
+        loads (Spark infers the schema) and returns the same rows."""
+        import json
+
+        p = str(tmp_path / "loaded")
+        self._saved_triangles(spark, p)
+        win = "20,20,60,60"
+
+        def _read():
+            full = load_partitioned(spark, p)
+            w = load_partitioned(spark, p, window=win)
+            return (full.dtypes, w.dtypes, sorted(r.id for r in full.select("id").collect()),
+                    sorted(r.id for r in w.select("id").collect()))
+
+        before = _read()
+        info = os.path.join(p, "_hgs_meta", "info.json")
+        with open(info) as fh:
+            meta = json.load(fh)
+        del meta["schema"]
+        with open(info, "w") as fh:
+            json.dump(meta, fh)
+        after = _read()
+        assert after == before
+        assert len(before[2]) == 400 and len(before[3]) > 0
+
+    @pytest.mark.parametrize("legacy", [False, True])
+    def test_load_partitioned_window_over_empty_tiles(self, spark, tmp_path, legacy):
+        """A tile with no rows has no directory; a window keeping only
+        such tiles returns an empty frame with the usual columns."""
+        import json
+        import shutil
+
+        from hadoopgis_spark.sources.loader import _read_tiles_table
+
+        p = str(tmp_path / "loaded")
+        meta = self._saved_triangles(spark, p)
+        win = "20,20,30,30"
+        dtypes = load_partitioned(spark, p, window=win).dtypes
+        x0, y0, x1, y1 = 20 - meta["max_obj_w"], 20 - meta["max_obj_h"], 30, 30
+        kept = [tid for tid, tx0, ty0, tx1, ty1 in _read_tiles_table(f"{p}/_hgs_meta/tiles")
+                if tx0 <= x1 and x0 <= tx1 and ty0 <= y1 and y0 <= ty1]
+        assert 0 < len(kept) < meta["n_tiles"]
+        for tid in kept:
+            shutil.rmtree(os.path.join(p, f"tile_id={tid}"), ignore_errors=True)
+        if legacy:
+            info = os.path.join(p, "_hgs_meta", "info.json")
+            del meta["schema"]
+            with open(info, "w") as fh:
+                json.dump(meta, fh)
+        out = load_partitioned(spark, p, window=win)
+        assert out.count() == 0
+        assert out.dtypes == dtypes
+        assert load_partitioned(spark, p).count() > 0
+
 
 class TestStreaming:
     def test_normalize_event_ts_both_physical_forms(self, spark):

@@ -35,23 +35,27 @@ def _jobs_during(spark, fn):
 class TestMetadataStaysDriverSide:
     def test_load_partitioned_window_prune_runs_zero_jobs(self, spark, tmp_path):
         """The tile-table window prune is driver-side pyarrow + pure
-        Python (round 13): PLANNING a windowed read must launch no
-        Spark job — jobs run only when the returned frame is acted on."""
+        Python (round 13), and the read names only the kept tile
+        directories with the schema stored at save time: PLANNING a
+        windowed read must launch no Spark job — jobs run only when the
+        returned frame is acted on. The layout has more than 32 tiles,
+        so listing the whole layout would run Spark's parallel listing
+        job (spark.sql.sources.parallelPartitionDiscovery.threshold)."""
+        import os
+
         from hadoopgis_spark.sources.loader import load_partitioned, save_partitioned
 
-        rows = [(i, float(i % 20) * 10, float(i % 10) * 10,
-                 float(i % 20) * 10 + 5, float(i % 10) * 10 + 5)
-                for i in range(200)]
+        rows = [(i, float(i % 40) * 5, float(i // 40 % 40) * 5,
+                 float(i % 40) * 5 + 2, float(i // 40 % 40) * 5 + 2)
+                for i in range(1600)]
         df = spark.createDataFrame(rows, "id long, xmin double, ymin double, xmax double, ymax double")
         p = str(tmp_path / "part")
-        save_partitioned(df, p, bucket_size=50)
+        save_partitioned(df, p, bucket_size=40)
+        assert sum(n.startswith("tile_id=") for n in os.listdir(p)) > 32
 
         n_jobs, out = _jobs_during(
-            spark, lambda: load_partitioned(spark, p, window="0,0,60,60"))
-        # <=1: spark.read.parquet may run Spark's own one-task schema-
-        # inference job over the partitioned dir; the tile PRUNE itself
-        # adds nothing (pre-r13 it was a dedicated filter+collect job)
-        assert n_jobs <= 1, f"window planning launched {n_jobs} Spark jobs"
+            spark, lambda: load_partitioned(spark, p, window="0,0,30,30"))
+        assert n_jobs == 0, f"window planning launched {n_jobs} Spark jobs"
         assert out.count() > 0  # the pruned read still serves rows
 
     def test_save_partitioned_single_stats_pass(self, spark, tmp_path):

@@ -70,16 +70,58 @@ def test_registry_plan_hygiene(spark, name):
 # list, the gated prefix, and COVERAGE.md must not silently diverge.
 # ---------------------------------------------------------------------------
 
-def test_bench_list_is_the_registry():
-    """bench.py derives its list from REGISTRY; pin the derivation so a
-    refactor can't reintroduce a hand-maintained (driftable) list."""
+def _bench_module():
     import importlib.util
     import os
     spec = importlib.util.spec_from_file_location(
         "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py"))
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
-    assert bench.bench_queries() == list(REGISTRY)
+    return bench
+
+
+def test_bench_list_is_the_registry():
+    """bench.py derives its list from REGISTRY; pin the derivation so a
+    refactor can't reintroduce a hand-maintained (driftable) list."""
+    assert _bench_module().bench_queries() == list(REGISTRY)
+
+
+def test_bench_build_split_skips_failed_queries(spark):
+    """A query that fails after a memoized build charges no build time:
+    its wall time is not in the total, so value == build_total +
+    serve_value still holds and serve_value stays non-negative."""
+    import time
+    import uuid
+    from types import SimpleNamespace
+
+    import hadoopgis_spark.workload as wl
+
+    bench = _bench_module()
+    keys = [("bench-split", uuid.uuid4().hex) for _ in range(2)]
+
+    def build():
+        time.sleep(0.05)
+        return spark.range(1)
+
+    def ok(spark_, sf):
+        return wl._memo(keys[0], build)
+
+    def boom(spark_, sf):
+        wl._memo(keys[1], build)
+        raise RuntimeError("fails after its build")
+
+    registry = {"ok": SimpleNamespace(fn=ok), "boom": SimpleNamespace(fn=boom)}
+    try:
+        timings, builds = bench.time_queries(spark, "sf0.1", ["boom", "ok"], registry)
+    finally:
+        for k in keys:
+            wl._FRAME_MEMO.pop(k, None)
+    assert timings["boom"] == -1.0 and "boom" not in builds
+    assert builds["ok"] >= 0.05
+    out, detail = bench.summarize(timings, builds, "/data/sf0.1")
+    assert out["value"] == pytest.approx(out["build_total"] + out["serve_value"])
+    assert out["build_total"] == builds["ok"] and out["serve_value"] >= 0
+    assert detail["failed"] == ["boom"] and out["sf"] == 0.1
 
 
 def test_gated_prefix_contract():
